@@ -238,8 +238,40 @@ def _canon_udf(urls: pd.Series) -> pd.Series:
 
 
 def canon_expr(url_col: Column) -> Column:
-    """Vectorized canonicalization (Arrow pandas UDF)."""
-    return _canon_udf(url_col)
+    """Vectorized canonicalization (Arrow pandas UDF).
+
+    Non-nullable: the kernel maps null to "" and never returns null, and
+    saying so keeps Catalyst from inferring ``isnotnull(url_canon)`` for a
+    join on the result. That inferred filter is pushed below the projection
+    as ``isnotnull(udf(url))``, a second Python pass over the same rows."""
+    return F.coalesce(_canon_udf(url_col), F.lit(""))
+
+
+# URLs canonicalize_url provably maps to themselves: lower-case http(s)
+# scheme and ASCII host (letters, digits, ".", "-", "_"), a non-default
+# port in 0-65535 without leading zeros, a path, an optional non-empty
+# query, no fragment, no tab/CR/LF and no whitespace at either end.
+# Canonicalization is not idempotent in general (``"http://a/x ?"`` →
+# ``"http://a/x "`` → ``"http://a/x"``); this shape is the part where a
+# second pass is a no-op.
+_WS_CLASS = "".join(f"\\u{ord(c):04x}" for c in _PY_WS)
+_PORT = (
+    r"(?:0|[1-9][0-9]{0,3}|[1-5][0-9]{4}|6[0-4][0-9]{3}|65[0-4][0-9]{2}"
+    r"|655[0-2][0-9]|6553[0-5])"
+)
+_FIXED_POINT_BODY = (
+    r"^(?:http://[a-z0-9._\-]*(?::(?!80/)" + _PORT + r")?"
+    r"|https://[a-z0-9._\-]*(?::(?!443/)" + _PORT + r")?)"
+    r"/[^?#\t\n\r]*(?:\?[^#\t\n\r]+)?(?<![" + _WS_CLASS + "])"
+)
+CANON_FIXED_POINT_JAVA = _FIXED_POINT_BODY + r"\z"  # \z: Java's absolute end
+CANON_FIXED_POINT_PY = _FIXED_POINT_BODY + r"\Z"  # the same anchor in Python re
+
+
+def canon_fixed_point_expr(url_col: Column) -> Column:
+    """True where ``canonicalize_url(url) == url`` is guaranteed — a JVM
+    regex, no Python. False means "unknown", not "changes"."""
+    return F.coalesce(url_col.rlike(CANON_FIXED_POINT_JAVA), F.lit(False))
 
 
 def host_expr(canon_url_col: Column) -> Column:
@@ -255,11 +287,6 @@ def url_hash_expr(canon_url_col: Column) -> Column:
 def host_bucket_expr(host_col: Column, n_buckets: int) -> Column:
     """Salted host-hash bucket for partitioning frontier state."""
     return F.pmod(F.xxhash64(host_col), F.lit(n_buckets)).cast("int")
-
-
-@pandas_udf(ArrayType(StringType()))
-def _outlinks_udf(base: pd.Series, html: pd.Series) -> pd.Series:
-    return _outlinks_batch(base, html)
 
 
 def _links_from_hrefs_batch(base: pd.Series, hrefs: pd.Series) -> pd.Series:

@@ -159,6 +159,10 @@ def passage_windows(
     from crawler_spark.pipeline.textstats import tokens_expr
 
     b, s = int(size), int(stride)
+    # stride > size would skip the tokens between windows and emit an empty
+    # trailing window past the end; stride < 1 never advances
+    if not 1 <= s <= b:
+        raise ValueError(f"passage_windows needs 1 <= stride <= size, got {stride=} {size=}")
     toks = df.select(
         F.col(id_col), tokens_expr(F.col(text_col)).alias("_toks")
     ).withColumn("_n", F.size("_toks")).filter(F.col("_n") >= 1)

@@ -321,32 +321,38 @@ def crawl(
         )
     else:
         start_round = 0
-        seeds_c = _prepare_seeds(spark, seeds, cfg)
-        if not empty_robots:
-            allowed = robots_allowed(seeds_c, robots)
-        else:
-            allowed = seeds_c
-        frontier = _assign_seq(allowed, 0, 0)
-        # free by-product of _assign_seq's offsets collect — no count() job
-        seq_offset = frontier._assign_seq_total
-        seed_cache = getattr(frontier, "_assign_seq_cache", None)
-        seen = seeds_c.select("url_hash", "bucket", "url_canon")
-        bloom = bloom_state.empty(spark) if bloom_state else None
-        if bloom_state is not None:
-            bloom = bloom_state.merge(bloom, seen.select("bucket", "url_hash"))
-        # round-0 checkpoint of initial state
-        frontier = _snapshot(spark, frontier, _ckpt(cfg, -1, "frontier"), nparts)
-        if seed_cache is not None:
-            seed_cache.unpersist()
-        # seen is an append-only DELTA LOG: each round writes only its newly
-        # admitted urls; the live table is a multi-path read. A full-table
-        # rewrite per round would be O(|seen-so-far|) — the dominant write at
-        # 10^10 URLs — where the delta is O(|new this round|). With Iceberg
-        # the delta write is writeTo(seen).append() on the same snapshot.
-        seen = _snapshot(spark, seen, _ckpt(cfg, -1, "seen"), nparts)
-        seen_paths = [_ckpt(cfg, -1, "seen")]
-        if bloom is not None:
-            bloom = _snapshot(spark, bloom, _ckpt(cfg, -1, "bloom"), 1)
+        # read by the seq assignment (range sample + cached rank), the seen
+        # snapshot and the Bloom merge: cache it so the seeds are read,
+        # canonicalized and deduped once, not once per reader
+        seeds_c = _prepare_seeds(spark, seeds, cfg).persist()
+        try:
+            if not empty_robots:
+                allowed = robots_allowed(seeds_c, robots)
+            else:
+                allowed = seeds_c
+            frontier = _assign_seq(allowed, 0, 0)
+            # free by-product of _assign_seq's offsets collect — no count() job
+            seq_offset = frontier._assign_seq_total
+            seed_cache = getattr(frontier, "_assign_seq_cache", None)
+            seen = seeds_c.select("url_hash", "bucket", "url_canon")
+            bloom = bloom_state.empty(spark) if bloom_state else None
+            if bloom_state is not None:
+                bloom = bloom_state.merge(bloom, seen.select("bucket", "url_hash"))
+            # round-0 checkpoint of initial state
+            frontier = _snapshot(spark, frontier, _ckpt(cfg, -1, "frontier"), nparts)
+            if seed_cache is not None:
+                seed_cache.unpersist()
+            # seen is an append-only DELTA LOG: each round writes only its newly
+            # admitted urls; the live table is a multi-path read. A full-table
+            # rewrite per round would be O(|seen-so-far|) — the dominant write at
+            # 10^10 URLs — where the delta is O(|new this round|). With Iceberg
+            # the delta write is writeTo(seen).append() on the same snapshot.
+            seen = _snapshot(spark, seen, _ckpt(cfg, -1, "seen"), nparts)
+            seen_paths = [_ckpt(cfg, -1, "seen")]
+            if bloom is not None:
+                bloom = _snapshot(spark, bloom, _ckpt(cfg, -1, "bloom"), 1)
+        finally:
+            seeds_c.unpersist()
         frontier_size = seq_offset  # every admitted seed is a frontier row
         _write_manifest(
             cfg,
@@ -458,7 +464,7 @@ def crawl(
             "url_canon",
             "html",
         ).repartition(spark.sparkContext.defaultParallelism)
-        # flat mapInPandas expansion: href scan stays JVM-side, no per-page
+        # flat mapInArrow expansion: href scan stays JVM-side, no per-page
         # list rebuild + re-explode (see frontier.canon.flat_outlinks)
         links = flat_outlinks(parents, ["parent_priority", "parent_seq"])
         # first-occurrence order across the batch follows the schedule order

@@ -59,6 +59,7 @@ from pyspark.sql.types import (
 
 from crawler_spark.frontier.canon import (
     canon_expr,
+    canon_fixed_point_expr,
     flat_outlinks,
     host_bucket_expr,
     host_expr,
@@ -71,7 +72,13 @@ from crawler_spark.frontier.politeness import (
 )
 
 # rows flowing through the watched directory: url + admission key; seq and
-# round_added are null for NEW candidates, set for deferred carry-overs
+# round_added are null for NEW candidates, set for deferred carry-overs.
+# ``url`` is the batch's ``url_canon`` as published: seeds are canonicalized
+# once at publish, outlinks leave flat_outlinks canonical and carry-overs
+# are frontier rows, so a batch never runs the canonicalizer. The one gap:
+# canonicalization is not idempotent on a few odd shapes, and batches used
+# to canonicalize every row again; _publish gives exactly those rows that
+# second pass (see canon_fixed_point_expr).
 CAND_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -120,7 +127,12 @@ class StreamCrawlConfig:
 
 
 def _publish(
-    df: DataFrame, stage_path: str, dest_dir: str, prefix: str, skip_if_empty: bool = False
+    df: DataFrame,
+    stage_path: str,
+    dest_dir: str,
+    prefix: str,
+    skip_if_empty: bool = False,
+    recanon_odd: bool = False,
 ) -> int:
     """Write ``df`` to a staging dir, then move its part-files FLAT into the
     watched directory under deterministic ``{prefix}-{i}.parquet`` names.
@@ -138,15 +150,31 @@ def _publish(
     pre-r4 caller paid (empty batches must not publish: each would enqueue
     under a fresh batch id and chain empty batches forever). A suppressed
     stage is deleted on the spot (r5, ADVICE r4) so drain-terminating
-    rounds stop leaving dead from_batch=N dirs behind."""
+    rounds stop leaving dead from_batch=N dirs behind.
+
+    ``recanon_odd``: the same observation counts urls that are not provably
+    canonical fixed points; only if there are any is the stage read back,
+    every url canonicalized once more (a no-op on the others) and written
+    to a sibling stage that is published instead. Reading the stage, not
+    ``df``, keeps ``df``'s lineage (the feedback's outlink scan) to one run."""
     obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
-        stage_path
-    )
+    counts = [F.count(F.lit(1)).alias("n")]
+    if recanon_odd:
+        odd = ~canon_fixed_point_expr(F.col("url"))
+        counts.append(F.count(F.when(odd, 1)).alias("n_odd"))
+    df.observe(obs, *counts).write.mode("overwrite").parquet(stage_path)
     n = int(obs.get["n"] or 0)
     if skip_if_empty and n == 0:
         shutil.rmtree(stage_path, ignore_errors=True)
         return 0
+    if recanon_odd and obs.get["n_odd"]:
+        recanon_path = stage_path.rstrip("/") + "_recanon"
+        staged = df.sparkSession.read.parquet(stage_path)
+        staged.withColumn("url", canon_expr(F.col("url"))).write.mode(
+            "overwrite"
+        ).parquet(recanon_path)
+        shutil.rmtree(stage_path, ignore_errors=True)
+        stage_path = recanon_path
     parts = sorted(
         f for f in os.listdir(stage_path) if f.endswith(".parquet") and not f.startswith(".")
     )
@@ -159,11 +187,11 @@ def _publish(
 
 
 def _keyed_new(cands: DataFrame) -> DataFrame:
-    """New candidates: canonicalize + first-occurrence dedup within the
-    batch (keep the smallest admission key — the batch scheduler's
+    """New (already canonical) candidates: first-occurrence dedup within
+    the batch (keep the smallest admission key — the batch scheduler's
     _dedup_candidates semantics), then derive host/bucket/hash."""
     c = cands.select(
-        canon_expr(F.col("url")).alias("url_canon"),
+        F.col("url").alias("url_canon"),
         F.col("priority").cast("int").alias("priority"),
         F.col("occ_a").cast("long").alias("occ_a"),
         F.col("occ_b").cast("long").alias("occ_b"),
@@ -199,7 +227,7 @@ def _round_fn(
 
         # deferred carry-overs: already seen + robots-vetted; keep identity
         carried = batch.filter(F.col("seq").isNotNull()).select(
-            canon_expr(F.col("url")).alias("url_canon"),
+            F.col("url").alias("url_canon"),
             "priority", "occ_a", "occ_b", "seq", "round_added",
         ).withColumn("host", host_expr(F.col("url_canon")))
 
@@ -304,6 +332,7 @@ def _round_fn(
             cfg.frontier_in,
             f"b{batch_id}",
             skip_if_empty=True,
+            recanon_odd=True,
         )
         ok.unpersist()
         scheduled.unpersist()
@@ -339,9 +368,11 @@ def stream_crawl(
     os.makedirs(cfg.seen_dir, exist_ok=True)
     os.makedirs(cfg.stage_dir, exist_ok=True)
 
+    # seeds are canonicalized here, once; every later batch reads canonical
+    # urls (CAND_SCHEMA). A restart re-publishes them under the same names.
     _publish(
         seeds.select(
-            F.col("url"),
+            canon_expr(F.col("url")).alias("url"),
             F.col("priority").cast("int").alias("priority"),
             F.col("seq").cast("long").alias("occ_a"),
             F.lit(0).cast("long").alias("occ_b"),
@@ -353,25 +384,30 @@ def stream_crawl(
         "seeds",
     )
 
+    # every micro-batch's fetch join reads the corpus: cache it so it is
+    # canonicalized once per crawl, not once per batch
     corpus = pages.withColumn("url_canon", canon_expr(F.col("url"))).select(
         "url_canon", F.col("html").cast("string").alias("html")
-    )
+    ).persist()
     round_fn = _round_fn(spark, corpus, robots, politeness, cfg)
 
     passes = 0
-    for _ in range(cfg.max_passes):
-        src = spark.readStream.schema(CAND_SCHEMA).parquet(cfg.frontier_in)
-        q = (
-            src.writeStream.foreachBatch(round_fn)
-            .option("checkpointLocation", cfg.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        passes += 1
-        n_in = sum(p["numInputRows"] for p in q.recentProgress)
-        if n_in == 0:
-            break
+    try:
+        for _ in range(cfg.max_passes):
+            src = spark.readStream.schema(CAND_SCHEMA).parquet(cfg.frontier_in)
+            q = (
+                src.writeStream.foreachBatch(round_fn)
+                .option("checkpointLocation", cfg.checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            passes += 1
+            n_in = sum(p["numInputRows"] for p in q.recentProgress)
+            if n_in == 0:
+                break
+    finally:
+        corpus.unpersist()
 
     schedule = (
         spark.read.parquet(

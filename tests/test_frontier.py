@@ -251,6 +251,34 @@ ADVERSARIAL_URLS = [
 ]
 
 
+# shapes where the RE2 fast path and the pure-Python kernel could diverge
+EDGE_URLS = [
+    "http://a.example/x#f\u2028g",   # U+2028 in fragment: '.' and '$' line-terminator quirks
+    "http://a.example/b\u2028",      # U+2028 at end of path
+    "http://a.example/b\u0085",      # NEL at end
+    "http://a.example:0/x",          # port 0 kept as :0
+    "http://a.example:00080/x",      # >5 digits → slow path
+    "http://",                       # empty host
+    "HTTP://A.Example",              # no path at all
+    "http://a.example/p?#",          # empty query and empty fragment
+    "http://a.example/p?q#",         # empty fragment only
+    "ht+p.x://a.example/",           # exotic-but-legal scheme charset
+    "http://a\t.exam\nple/x",        # unsafe bytes removed before parse
+    None,
+]
+
+
+def _url_strategy():
+    """Hypothesis URLs: well-formed http(s) shapes plus short strings over
+    the URL delimiters."""
+    from hypothesis import strategies as st
+
+    return st.one_of(
+        st.from_regex(r"https?://[A-Za-z0-9.\-]{1,20}(:[0-9]{1,4})?(/[a-z0-9/.]{0,20})?(\?[a-z=&]{0,10})?(#[a-z]{0,5})?", fullmatch=True),
+        st.text(alphabet="abc:/?#@.%", max_size=30),
+    )
+
+
 def test_canon_batch_matches_kernel():
     """The vectorized batch kernel is byte-equal to the pure-Python kernel
     on adversarial URLs (fast path + every slow-path trigger)."""
@@ -291,13 +319,8 @@ def test_canon_batch_hypothesis():
 
     from crawler_spark.frontier.canon import _canon_batch
 
-    url_st = st.one_of(
-        st.from_regex(r"https?://[A-Za-z0-9.\-]{1,20}(:[0-9]{1,4})?(/[a-z0-9/.]{0,20})?(\?[a-z=&]{0,10})?(#[a-z]{0,5})?", fullmatch=True),
-        st.text(alphabet="abc:/?#@.%", max_size=30),
-    )
-
     @settings(max_examples=200, deadline=None)
-    @given(st.lists(url_st, min_size=1, max_size=20))
+    @given(st.lists(_url_strategy(), min_size=1, max_size=20))
     def inner(urls):
         want = []
         for u in urls:
@@ -311,29 +334,123 @@ def test_canon_batch_hypothesis():
     inner()
 
 
-def test_canon_expr_matches_kernel_adversarial(spark):
-    """canon_expr (JVM codegen fast path + masked Arrow fallback) must be
-    byte-equal to the pure-Python kernel row-for-row — including shapes
-    where Java-regex and RE2 semantics could diverge (line-terminator code
-    points vs `$`/`.`, port 0 / leading zeros, empty host) and every
-    slow-path trigger. A Java-gate rejection is harmless (the Python kernel
-    answers); a Java-gate ACCEPT with a different value is the bug class
-    this test pins."""
-    edge = [
-        "http://a.example/x#f\u2028g",   # U+2028 in fragment: Java '.' stops, RE2 doesn't
-        "http://a.example/b\u2028",      # U+2028 at end of path
-        "http://a.example/b\u0085",      # NEL at end (Java '$' line-terminator quirk)
-        "http://a.example:0/x",          # port 0 kept as :0
-        "http://a.example:00080/x",      # >5 digits → slow path
-        "http://",                       # empty host
-        "HTTP://A.Example",              # no path at all
-        "http://a.example/p?#",          # empty query and empty fragment
-        "http://a.example/p?q#",         # empty fragment only
-        "ht+p.x://a.example/",           # exotic-but-legal scheme charset
-        "http://a\t.exam\nple/x",        # unsafe bytes removed before parse
-        None,
+def test_canonicalize_url_idempotence():
+    """canonicalize_url(canonicalize_url(u)) == canonicalize_url(u) holds on
+    well-formed http(s) URLs but not in general: the kernel strips before
+    it parses, so "http://a.example/ ?" → "http://a.example/ " (the empty
+    query goes, the inner space becomes trailing) → "http://a.example/";
+    and "http:////" → "http://" → "http:///". The stream crawl therefore
+    skips the second pass only where canon_fixed_point_expr proves a fixed
+    point: every counterexample must fall outside that predicate. The batch
+    kernel must agree with the Python kernel on the second pass too."""
+    import re
+
+    import pandas as pd
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from crawler_spark.frontier.canon import CANON_FIXED_POINT_PY, _canon_batch
+
+    fixed = re.compile(CANON_FIXED_POINT_PY)
+    assert canonicalize_url("http://a.example/ ?") == "http://a.example/ "
+    assert canonicalize_url("http://a.example/ ") == "http://a.example/"
+    assert canonicalize_url(canonicalize_url("http:////")) == "http:///"
+
+    # slow-path shapes assembled from parts: userinfo, IPv6 (and a broken
+    # bracket), bad and default ports, whitespace inside and around
+    shaped = st.tuples(
+        st.sampled_from(["", " ", "\t"]),
+        st.sampled_from(["http", "HTTPS", "ftp", "ht+p"]),
+        st.sampled_from(["", "user:pw@", "@"]),
+        st.sampled_from(["a.example", "A.Example", "[2001:db8::1]", "[::1", "under_score.example", ""]),
+        st.sampled_from(["", ":80", ":443", ":0080", ":99999", ":", ":x"]),
+        st.text(alphabet="ab/?#.%@ \t", max_size=12),
+        st.sampled_from(["", " ", "\n"]),
+    ).map(lambda t: f"{t[0]}{t[1]}://{''.join(t[2:])}")
+
+    well_formed = st.from_regex(
+        r"https?://[A-Za-z0-9.\-]{1,20}(:[0-9]{1,5})?(/[a-zA-Z0-9/.%~]{0,20})?(\?[a-z=&]{0,10})?(#[a-z]{0,5})?",
+        fullmatch=True,
+    )
+
+    def check(urls, must_hold=False):
+        once = [canonicalize_url(u) for u in urls]
+        twice = [canonicalize_url(c) for c in once]
+        assert _canon_batch(pd.Series(once, dtype=object)).tolist() == twice
+        for c, c2 in zip(once, twice):
+            assert c2 == c or (not must_hold and not fixed.search(c)), (c, c2)
+
+    check(ADVERSARIAL_URLS + EDGE_URLS, must_hold=True)
+
+    @settings(max_examples=300, deadline=None)
+    @given(well_formed)
+    def holds(url):
+        check([url], must_hold=True)
+
+    @settings(max_examples=500, deadline=None)
+    @given(st.one_of(_url_strategy(), shaped))
+    def caught(url):
+        check([url])
+
+    holds()
+    caught()
+
+
+def test_canon_fixed_point_predicate_is_sound(spark):
+    """Where canon_fixed_point_expr says True, canonicalize_url(u) == u —
+    the stream crawl skips the second canonicalization of exactly those
+    urls. The JVM regex and its Python twin must agree row for row."""
+    import re
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from crawler_spark.frontier.canon import (
+        CANON_FIXED_POINT_PY,
+        canon_fixed_point_expr,
+    )
+
+    fixed = re.compile(CANON_FIXED_POINT_PY)
+    near = st.from_regex(
+        r"(https?|HTTP)://[a-zA-Z0-9.\-_]{0,8}(:[0-9]{0,6})?(/[^#]{0,12})?(\?[^#]{0,6})?(#.{0,3})?",
+        fullmatch=True,
+    )
+
+    @settings(max_examples=1000, deadline=None)
+    @given(st.one_of(near, _url_strategy()))
+    def inner(url):
+        if fixed.search(url):
+            assert canonicalize_url(url) == url
+
+    inner()
+
+    urls = ADVERSARIAL_URLS + EDGE_URLS
+    urls = urls + [canonicalize_url(u) for u in urls] + [
+        "http://a.example:80/x", "https://a.example:443/", "https://a.example:8443/x?q",
+        "http://a.example:0/x", "http://a.example:00/x", "http://a.example/x?",
+        "http://a.example/x \u2028", "http:///x", "http://a.example/x\u00a0?q=1",
+        "http://a_b.example:65535/x", "http://a.example:65536/x",
+        "https://a.example:10000/x?q", "http://a.example:080/x",
     ]
-    urls = ADVERSARIAL_URLS + edge
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    got = [
+        r["f"] for r in df.select(canon_fixed_point_expr(F.col("url")).alias("f")).collect()
+    ]
+    want = [u is not None and bool(fixed.search(u)) for u in urls]
+    assert got == want
+    assert any(want) and not all(want)
+    for u, f in zip(urls, want):
+        if f:
+            assert canonicalize_url(u) == u, u
+
+
+def test_canon_expr_matches_kernel_adversarial(spark):
+    """canon_expr (Arrow pandas UDF: pyarrow fast path + per-row Python
+    fallback) must be byte-equal to the pure-Python kernel row-for-row —
+    including shapes where RE2 and Python `re` semantics could diverge
+    (line-terminator code points vs `$`/`.`, port 0 / leading zeros, empty
+    host) and every slow-path trigger, and must map null to ""."""
+    urls = ADVERSARIAL_URLS + EDGE_URLS
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     got = [r["c"] for r in df.select(canon_expr(F.col("url")).alias("c")).collect()]
     want = [canonicalize_url(u) if u is not None else "" for u in urls]
@@ -341,8 +458,9 @@ def test_canon_expr_matches_kernel_adversarial(spark):
 
 
 def test_outlinks_expr_matches_kernel_mixed(spark):
-    """outlinks_expr: JVM array fast path on all-fast pages, Arrow kernel on
-    pages with any slow href — equal to the Python kernel either way."""
+    """outlinks_expr (JVM href scan + Arrow resolve/canonicalize) is equal
+    to the Python kernel on relative, absolute, non-http and link-free
+    pages."""
     from crawler_spark.frontier.canon import outlinks_expr
 
     pages = [

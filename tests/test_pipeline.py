@@ -1558,7 +1558,9 @@ def test_trustrank_seed_gated_teleport(spark):
 def test_link_reciprocity_hand_graph(spark):
     from crawler_spark.pipeline.graph import link_reciprocity
 
-    edges = [("a", "b"), ("b", "a"), ("a", "c"), ("b", "c"), ("c", "b")]
+    # the self-loop a->a is its own reverse: it must count neither as an
+    # out-edge nor as reciprocated
+    edges = [("a", "b"), ("b", "a"), ("a", "c"), ("b", "c"), ("c", "b"), ("a", "a")]
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {r["node"]: r for r in link_reciprocity(df, min_out=2).collect()}
     # a: out {b,c}, b comes back -> 1/2; b: out {a,c}, both come back -> 1
@@ -1603,3 +1605,17 @@ def test_passage_windows_overlap_tail_and_hash(spark):
     assert len(b) == 1 and b[0]["n_pass_tokens"] == 2
     assert b[0]["passage_hash"] == py_md5h60("one two")
     assert not [r for r in out if r["doc_id"] == 3]
+
+
+def test_passage_windows_rejects_stride_outside_one_to_size(spark):
+    from crawler_spark.pipeline.packing import passage_windows
+
+    df = spark.createDataFrame([(1, "t0 t1 t2 t3 t4")], ["doc_id", "text"])
+    # stride 6 > size 4 would skip t4 and emit an empty second window that
+    # starts past the end of the 5-token doc; stride 0 never advances
+    for stride in (6, 0, -1):
+        with pytest.raises(ValueError, match="stride"):
+            passage_windows(df, "doc_id", "text", size=4, stride=stride)
+    # stride == size is the disjoint split: 5 tokens -> windows at 0 and 4
+    out = passage_windows(df, "doc_id", "text", size=4, stride=4).collect()
+    assert sorted((r["start_tok"], r["n_pass_tokens"]) for r in out) == [(0, 4), (4, 1)]

@@ -467,3 +467,43 @@ def test_url_canon_expressions_are_map_only_codegen(spark, sf001_dir):
     assert "EvalPython" not in simple, simple
     # "*" prefixes whole-stage-codegen operators in simple mode
     assert "*(" in simple, simple
+
+
+def test_fetch_join_canonicalizes_corpus_once(spark):
+    """The broadcast fetch join keys the corpus by canon_expr. A nullable
+    key would make Catalyst infer isnotnull(url_canon) and push it below
+    the projection as isnotnull(udf(url)): a second Python pass over the
+    whole corpus every round. Exactly one ArrowEvalPython may plan."""
+    from crawler_spark.frontier.canon import canon_expr
+
+    pages = spark.range(50).select(
+        F.format_string("HTTP://H%d.example/p/%d", F.pmod("id", F.lit(7)), "id").alias("url"),
+        F.lit("<html></html>").alias("html"),
+    )
+    corpus = pages.withColumn("url_canon", canon_expr(F.col("url"))).select(
+        "url_canon", "html"
+    )
+    sched = spark.range(5).select(
+        F.format_string("http://h%d.example/p/%d", F.pmod("id", F.lit(7)), "id").alias(
+            "url_canon"
+        )
+    )
+    simple = _plan(corpus.join(F.broadcast(sched), "url_canon", "inner"), "simple")
+    assert "BroadcastHashJoin" in simple, simple
+    assert simple.count("ArrowEvalPython") == 1, simple
+
+
+def test_jd_funder_fields_share_one_followup_canon(spark):
+    """jd's two funder fields format the same follow-up URL from the same
+    base value: extract_fields must canonicalize it and join the corpus
+    once for both, not once per field."""
+    from crawler_spark.collector import extract_fields
+    from crawler_spark.examples.jd import jd_fields
+
+    pages = spark.range(20).select(
+        F.format_string("https://z.example/project/details/%d.html", "id").alias("url_canon"),
+        F.lit("<html></html>").alias("html"),
+    )
+    simple = _plan(extract_fields(pages, jd_fields("charity"), corpus=pages), "simple")
+    assert simple.count("_canon_udf(") == 1, simple
+    assert simple.count("LeftOuter") == 1, simple

@@ -102,6 +102,95 @@ def test_stream_crawl_rerun_is_noop(spark, corpus, tmp_path_factory):
     assert second["schedule"].count() == sched1
 
 
+def test_publish_recanonicalizes_only_odd_urls(spark, tmp_path):
+    """Feedback urls are published canonical. Canonicalization is not
+    idempotent on a few shapes ("…/y ?" → "…/y " → "…/y"); such a url gets
+    the second pass a batch used to give every url, the others go as-is.
+    The second pass reads the written stage back: the feedback frame's
+    lineage runs once, which the accumulator in its projection counts."""
+    from crawler_spark.frontier.canon import canonicalize_url
+    from crawler_spark.streaming.crawl_stream import _publish
+
+    urls = [
+        "http://a.example/x",
+        canonicalize_url("http://a.example/y ?"),
+        "https://b.example/",
+        # fixed points the predicate proves
+        "http://under_score.example/u",
+        "http://a.example:65535/p",
+        # shapes it leaves to the second pass: IPv6, IDN, out-of-range port
+        "http://[2001:db8::1]/v6",
+        "http://bücher.example/idn",
+        "http://a.example:99999/bad",
+    ]
+    assert urls[1] == "http://a.example/y "
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(u):
+        calls.add(1)
+        return u
+
+    dest = tmp_path / "dest"
+    dest.mkdir()
+    df = (
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .coalesce(1)
+        .select(counted("url").alias("url"))
+    )
+    n = _publish(df, str(tmp_path / "stage"), str(dest), "t", recanon_odd=True)
+    got = sorted(r["url"] for r in spark.read.parquet(str(dest)).collect())
+    assert n == len(urls)
+    assert calls.value == len(urls)
+    assert got == sorted(canonicalize_url(u) for u in urls)
+    assert "http://a.example/y" in got
+    assert "http://under_score.example/u" in got
+
+
+def test_stream_crawl_resumes_dir_with_raw_seed_files(spark, corpus, tmp_path_factory):
+    """Seeds used to be published raw and canonicalized by every batch; now
+    they are canonicalized once at publish. A work dir whose frontier_in
+    still holds raw seed files resumes correctly: stream_crawl re-publishes
+    the seeds, canonical, over the same file names before the stream starts."""
+    from crawler_spark.streaming.crawl_stream import _publish
+
+    work = str(tmp_path_factory.mktemp("stream_raw_seeds"))
+    pages, seeds, robots, politeness = _inputs(spark, corpus)
+    # raw spellings of the same seeds: upper-case scheme/host, default port,
+    # fragment, surrounding whitespace
+    origin = F.substring_index(F.col("url"), "/", 3)
+    raw = seeds.withColumn(
+        "url",
+        F.concat(
+            F.lit(" "),
+            F.upper(origin),
+            F.lit(":443"),
+            F.expr("substr(url, length(substring_index(url, '/', 3)) + 1)"),
+            F.lit("#frag "),
+        ),
+    )
+    cfg = StreamCrawlConfig(work_dir=work, default_budget=16, n_buckets=8, max_passes=60)
+    os.makedirs(cfg.frontier_in)
+    _publish(  # the seed file layout a run of the previous version leaves
+        raw.select(
+            "url",
+            F.col("priority").cast("int").alias("priority"),
+            F.col("seq").cast("long").alias("occ_a"),
+            F.lit(0).cast("long").alias("occ_b"),
+            F.lit(None).cast("long").alias("seq"),
+            F.lit(None).cast("int").alias("round_added"),
+        ),
+        os.path.join(work, "stage", "seeds"),
+        cfg.frontier_in,
+        "seeds",
+    )
+    res = stream_crawl(spark, pages, raw, robots, politeness, cfg)
+    oracle = _oracle(corpus)
+    assert {r["url_canon"] for r in res["seen"].collect()} == oracle.seen
+    got_fetched = {r["url"] for r in res["schedule"].filter(F.col("fetched")).collect()}
+    assert got_fetched == {e.url for e in oracle.schedule if e.fetched}
+
+
 def _ts(h, m=0):
     return dt.datetime(2025, 3, 1, h, m)
 
